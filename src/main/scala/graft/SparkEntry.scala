@@ -529,10 +529,10 @@ object SparkEntry {
         algo = graft.operators.Dedup.componentsStar(_, _, _))
     }),
 
-    // the DURABLE fixpoint variant through the same ground-truth closure:
-    // identical contract to q60, but every contraction round commits as an
-    // atomic snapshot and the labeler resumes from durable state (the state
-    // table is reset per run so the driver grades a full fixpoint)
+    // q60's labeler on the durable fixpoint store, through the same
+    // ground-truth closure: every contraction round commits as an atomic
+    // snapshot and the loop resumes from durable state (Fixpoint.Durable;
+    // the state table is reset per run so the driver grades a full fixpoint)
     "q67_components_resumable" -> ((s, d) => {
       val root = s"${SmokeWorld.auxDir}/tmp_star_state"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
@@ -541,7 +541,8 @@ object SparkEntry {
         graft.operators.Dedup.minhashLshPairsCollapsed(docs, "doc_id", "text")
       graft.operators.Dedup.nearDupKeepersCollapsed(docs, "doc_id",
         repPairs, members,
-        algo = graft.operators.Dedup.componentsStarResumable(_, root, _, _))
+        algo = graft.operators.Dedup.componentsStar(_, _, _,
+          store = graft.operators.Fixpoint.Durable(root)))
     }),
 
     // html → text extraction (north-star invariant: byte-identical extracted

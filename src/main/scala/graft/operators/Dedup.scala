@@ -542,20 +542,26 @@ object Dedup {
    *
    * Algorithm: hash-min label propagation — label(v) starts at v and each
    * round takes the min over v's neighborhood's labels, to fixpoint.
-   * Rounds = graph diameter; LSH/SimHash pair graphs are unions of
-   * quasi-cliques (bucket co-membership), so diameters stay small even at
-   * web scale. For adversarially long chains the published escalation is
-   * two-phase star contraction (Kiveris et al., "Connected Components in
-   * MapReduce and Beyond", SoCC 2014, O(log²n) rounds); not needed for the
-   * dedup-cluster shape this serves.
+   * Rounds = graph diameter. Two labelers share the (id, comp = min id)
+   * contract and are pinned to each other in DedupSpec:
+   *
+   *  - this one is the default of [[nearDupKeepers]] and
+   *    [[nearDupKeepersCollapsed]] (q59). LSH pair graphs are unions of
+   *    quasi-cliques (bucket co-membership), so their diameter is small,
+   *    and on them hash-min is the faster labeler: q59 reads 2.0–2.2 s
+   *    against the star labeler's 3.0 s on q60 (same corpus, 4 cores,
+   *    perfbench/README.md);
+   *  - [[componentsStar]] needs ~log² rounds whatever the diameter, so it
+   *    serves graphs that may hold long chains (q60, q67, the benchmark's
+   *    dedup phase, the soak).
+   *
+   * A graph whose diameter exceeds `maxIters` stops this labeler at an
+   * upper-bound partition: over-split, never merged wrongly.
    *
    * Scale shape: per round, one equi-join of the (2|E|)-row edge table
    * (pre-partitioned on `src` once, reused every round) against the |V|-row
    * label table plus one min-aggregation — no driver-side graph, no
-   * collect. Lineage is truncated every round with an eager
-   * `localCheckpoint` (the standard Spark iterative-algorithm discipline;
-   * without it round k's plan embeds rounds 1..k-1 and the optimizer
-   * re-walks an exponentially growing tree).
+   * collect. The rounds run in [[Fixpoint.iterate]].
    *
    * Output: (id, comp) for every id present in `pairs`, comp = min id of
    * the component. Ids absent from `pairs` are singletons — callers that
@@ -565,10 +571,9 @@ object Dedup {
       bCol: String = "id_b", maxIters: Int = 50): DataFrame = {
     // evaluate the caller's pair pipeline ONCE (both union branches below
     // would otherwise re-run it inside the edge materialization job)
-    val pairs = pairs0.select(col(aCol), col(bCol)).localCheckpoint(true)
+    val pairs = Fixpoint.materialize(pairs0.select(col(aCol), col(bCol)))
     // one exchange: hash(src) both co-locates the per-round join key and
-    // satisfies the dedup's ClusteredDistribution(src, dst) — the r5 shape
-    // paid a distinct-shuffle AND a repartition-shuffle here
+    // satisfies the dedup's ClusteredDistribution(src, dst)
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .repartition(col("src"))
@@ -577,74 +582,29 @@ object Dedup {
     // round 1 folded into initialization: comp₁(v) = min(v, min direct
     // neighbor) — exactly what one propagation from comp₀ = id computes, at
     // the cost of one aggregation instead of a full round + change probe
-    var labels = edges.groupBy("src").agg(min("dst").as("__mn"))
+    val init = edges.groupBy("src").agg(min("dst").as("__mn"))
       .select(col("src").as("id"), least(col("src"), col("__mn")).as("comp"))
-      .localCheckpoint(true)
-    var iter = 1
-    var converged = false
-    while (!converged && iter < maxIters) {
+    val labels = Fixpoint.iterate("components", init, maxIters - 1) { g =>
       // one propagation = min of the neighborhood labels, partial-aggregated
-      // map-side; the change flag rides INSIDE the checkpointed generation so
-      // the convergence probe is a scan of materialized blocks, not a second
-      // join of two label generations (which cost one extra shuffle per
-      // round in the r5 shape)
-      val lbl = labels.select(col("id").as("src"), col("comp"))
-      val pm = edges.join(lbl, "src")
+      // map-side; the change flag rides INSIDE the materialized generation
+      // so the convergence probe is a scan, not a join of two generations
+      val pm = edges.join(g.df.select(col("id").as("src"), col("comp")), "src")
         .groupBy("dst").agg(min("comp").as("__p"))
-      val next = labels
-        .join(pm.withColumnRenamed("dst", "id"), Seq("id"), "left")
+      g.df.join(pm.withColumnRenamed("dst", "id"), Seq("id"), "left")
         .select(col("id"),
           least(col("comp"), coalesce(col("__p"), col("comp"))).as("comp"),
           coalesce(col("__p") < col("comp"), lit(false)).as("__chg"))
-        .localCheckpoint(true)
-      val changed = next.filter(col("__chg")).limit(1).count()
-      // generation k is materialized and probed — release k−1's blocks
-      org.apache.spark.sql.graftshim.Shim.unpersistLocalCheckpoint(labels)
-      labels = next
-      converged = changed == 0L
-      iter += 1
-    }
-    if (!converged)
-      log.warn(s"components: no fixpoint after $maxIters rounds — graph " +
-        s"diameter exceeds the near-dup cluster shape; labels are an " +
-        s"upper-bound partition (over-split, never merged wrongly). " +
-        s"Use componentsStar for high-diameter graphs.")
+    } { (prev, g) => prev.nonEmpty && g.df.filter(col("__chg")).limit(1).count() == 0L }
     edges.unpersist()
+    Fixpoint.release(pairs)
     labels.select("id", "comp")
   }
 
-  /**
-   * Connected components by alternating star contraction — the O(log²n)-
-   * round escalation for graphs whose diameter defeats per-round label
-   * propagation (adversarially long chains; [[components]] needs diameter
-   * rounds, this needs ~log² rounds regardless of shape). Clean-room
-   * implementation of the two-phase algorithm of Kiveris, Lattanzi,
-   * Mirrokni, Rastogi, Vassilvitskii, "Connected Components in MapReduce
-   * and Beyond" (ACM SoCC 2014): each round rewires the edge set itself
-   * rather than propagating labels across it —
-   *
-   *  - large-star: every node connects its strictly-larger neighbors to
-   *    the minimum of its closed neighborhood;
-   *  - small-star: with edges directed larger→smaller, every node collapses
-   *    its smaller neighbors (and itself) onto their minimum.
-   *
-   * Both halves are one groupBy-min plus one equi-join over the edge table
-   * — no driver-side graph, no collect; lineage truncated per round with an
-   * eager localCheckpoint like [[components]]. At fixpoint the edge set is
-   * a union of stars centered on each component's min id, which reads out
-   * as the (id, comp) label table directly. Ordering only needs a total
-   * order on ids, so string ids work (lexicographic min becomes the
-   * representative).
-   *
-   * Output: (id, comp) for every id present in `pairs` — same contract as
-   * [[components]]; singletons are the caller's left-join (see
-   * [[nearDupKeepers]]).
-   */
-  // canonical edge form shared by the star-contraction variants:
-  // u > v, no self-loops, distinct. The dedup is clustered by u ALONE
-  // (hash(u) satisfies ClusteredDistribution(u, v), so dropDuplicates adds
-  // no second exchange) — the output arrives hash-partitioned on u, which
-  // the small-star half consumes directly (groupBy(u) + join on u, zero
+  // canonical edge form of the star contraction: u > v, no self-loops,
+  // distinct. The dedup is clustered by u ALONE (hash(u) satisfies
+  // ClusteredDistribution(u, v), so dropDuplicates adds no second
+  // exchange) — the output arrives hash-partitioned on u, which the
+  // small-star half consumes directly (groupBy(u) + join on u, zero
   // further exchanges). u is the NON-root end of every canonical edge, so
   // the u-hash spreads; the hot key of a contracting graph is the root v.
   private def canonStar(e: DataFrame): DataFrame = e
@@ -658,8 +618,7 @@ object Dedup {
     * canonical edge set; returns the next canonical generation.
     * Exchange budget: ONE shuffle of nbrs (hash(x), reused by both the
     * min-aggregation and the neighborhood join) + the two canonStar
-    * repartitions — the r5 shape paid six (each groupBy/join/distinct
-    * re-shuffled its own input). */
+    * repartitions. */
   private def starRound(edges: DataFrame): DataFrame = {
     // large-star: neighborhoods from both directions; m = min(N(x) ∪ {x});
     // emit (n, m) for the strictly-larger neighbors n > x. One explicit
@@ -690,136 +649,63 @@ object Dedup {
     ids.join(edges.select(col("u").as("id"), col("v").as("comp")), Seq("id"), "left")
       .groupBy("id").agg(min(coalesce(col("comp"), col("id"))).as("comp"))
 
+  /**
+   * Connected components by alternating star contraction — the O(log²n)-
+   * round labeler for graphs whose diameter defeats per-round label
+   * propagation (adversarially long chains; [[components]] needs diameter
+   * rounds, this needs ~log² rounds regardless of shape). Clean-room
+   * implementation of the two-phase algorithm of Kiveris, Lattanzi,
+   * Mirrokni, Rastogi, Vassilvitskii, "Connected Components in MapReduce
+   * and Beyond" (ACM SoCC 2014): each round rewires the edge set itself
+   * rather than propagating labels across it —
+   *
+   *  - large-star: every node connects its strictly-larger neighbors to
+   *    the minimum of its closed neighborhood;
+   *  - small-star: with edges directed larger→smaller, every node collapses
+   *    its smaller neighbors (and itself) onto their minimum.
+   *
+   * Both halves are one groupBy-min plus one equi-join over the edge table
+   * — no driver-side graph, no collect; the rounds run in
+   * [[Fixpoint.iterate]]. At fixpoint the edge set is a union of stars
+   * centered on each component's min id, which reads out as the (id, comp)
+   * label table directly. Ordering only needs a total order on ids, so
+   * string ids work (lexicographic min becomes the representative).
+   *
+   * `store` picks where the edge generations live. [[Fixpoint.Durable]]
+   * lands each one as a snapshot under its root and resumes there after a
+   * driver death; the contraction is deterministic (min-based,
+   * partitioning-independent), so resumed and uninterrupted runs converge
+   * to identical labels. A call that stops on `roundsThisRun` before the
+   * fixpoint returns the readout of its newest generation.
+   *
+   * Output: (id, comp) for every id present in `pairs` — same contract as
+   * [[components]]; singletons are the caller's left-join (see
+   * [[nearDupKeepers]]).
+   */
   def componentsStar(pairs0: DataFrame, aCol: String = "id_a",
-      bCol: String = "id_b", maxIters: Int = 30): DataFrame = {
+      bCol: String = "id_b", maxIters: Int = 30,
+      store: Fixpoint.Store = Fixpoint.Local): DataFrame = {
     // evaluate the caller's pair pipeline ONCE (it is typically the full
     // LSH candidate/verify chain); ids and the round-0 edge set both
-    // derive narrowly from the checkpointed copy
-    val pairs = pairs0.select(col(aCol), col(bCol)).localCheckpoint(true)
+    // derive narrowly from the materialized copy
+    val pairs = Fixpoint.materialize(pairs0.select(col(aCol), col(bCol)))
     val ids = pairs.select(col(aCol).as("id"))
       .union(pairs.select(col(bCol).as("id"))).distinct()
-    var edges = canonStar(pairs.select(col(aCol).as("u"), col(bCol).as("v")))
-      .localCheckpoint(true)
-    // count carried across rounds: both generations are canonical (distinct)
-    // sets, so equal counts + an empty one-sided anti-join probe proves set
-    // equality — one tiny job per round instead of isEmpty + two exceptAll
-    // scans, and the probe itself only runs on rounds where the counts match
-    var edgeCount = edges.count()
-    var iter = 0
-    var converged = edgeCount == 0L
-    while (!converged && iter < maxIters) {
-      val small = starRound(edges).localCheckpoint(true)
-      val smallCount = small.count()
-      converged = smallCount == edgeCount &&
-        small.join(edges, Seq("u", "v"), "left_anti").isEmpty
-      // generation k is materialized and probed — release k−1's blocks
-      org.apache.spark.sql.graftshim.Shim.unpersistLocalCheckpoint(edges)
-      edges = small
-      edgeCount = smallCount
-      iter += 1
+    val init = canonStar(pairs.select(col(aCol).as("u"), col(bCol).as("v")))
+    // both generations are canonical (distinct) sets, so equal counts + an
+    // empty one-sided anti-join prove set equality; the anti-join only runs
+    // on rounds where the counts match
+    val edges = Fixpoint.iterate("componentsStar", init, maxIters, store)(
+        g => starRound(g.df)) { (prev, g) =>
+      g.rows == prev.fold(0L)(_.rows) &&
+        prev.forall(p => g.df.join(p.df, Seq("u", "v"), "left_anti").isEmpty)
     }
-    if (!converged && edgeCount > 0L)
-      log.warn(s"componentsStar: no fixpoint after $maxIters rounds " +
-        s"(log²-round bound exceeded — should not happen below ~2^${maxIters / 6} nodes)")
-    starLabels(ids, edges)
+    // the readout joins `ids`, which reads `pairs`: it becomes the result
+    // before the input copy and the last generation are released
+    val labels = Fixpoint.materialize(starLabels(ids, edges))
+    Fixpoint.release(pairs, edges)
+    labels
   }
-
-  /**
-   * [[componentsStar]] with a DURABLE fixpoint: every contraction round
-   * lands the next edge generation as one atomic
-   * [[graft.sources.SnapTable]] snapshot under `stateRoot`, with
-   * (round, edge count, converged) carried in the manifest's operation
-   * string. A driver death at round k resumes at round k — not round 0 —
-   * which is the difference between restarting a 10^12-edge job and
-   * finishing it: per-round generations there are hours of shuffle, and
-   * [[componentsStar]]'s localCheckpoint generations die with the
-   * executors. Snapshot history doubles as an audit trail (time-travel
-   * reads any round's edge set until expiry).
-   *
-   * The contraction is deterministic (min-based, partitioning-independent),
-   * so resumed and uninterrupted runs converge to identical labels — the
-   * same invariant the streaming kill+resume and tile-converter ledgers
-   * pin. `roundsThisRun` bounds the rounds THIS call executes (a production
-   * driver loops `while (!componentsStarConverged(...)) ...` in whatever
-   * lease windows it gets; specs use it to simulate a crash per round).
-   * Returns the label readout of the newest durable generation — final
-   * exactly when [[componentsStarConverged]] reports true.
-   */
-  def componentsStarResumable(pairs0: DataFrame, stateRoot: String,
-      aCol: String = "id_a", bCol: String = "id_b",
-      maxIters: Int = 30, roundsThisRun: Int = Int.MaxValue): DataFrame = {
-    import graft.sources.SnapTable
-    val spark = pairs0.sparkSession
-    // one evaluation of the caller's pair pipeline, as in [[componentsStar]]
-    val pairs = pairs0.select(col(aCol), col(bCol)).localCheckpoint(true)
-    val ids = pairs.select(col(aCol).as("id"))
-      .union(pairs.select(col(bCol).as("id"))).distinct()
-    // resume point: the newest durable generation (its round state rides in
-    // the manifest summary, atomic with the file list), else round 0 built
-    // from the pairs
-    var (edges, edgeCount, round, converged) =
-      SnapTable.currentVersion(spark, stateRoot) match {
-        case Some(v) =>
-          val st = parseStarSummary(SnapTable.manifest(spark, stateRoot, v).summary)
-          (SnapTable.scan(spark, stateRoot), st._2, st._1, st._3)
-        case None =>
-          val e0 = canonStar(pairs.select(col(aCol).as("u"), col(bCol).as("v")))
-          val files = SnapTable.stage(e0, stateRoot)
-          val n0 = files.map(_.rows).sum
-          val c0 = n0 == 0L
-          SnapTable.publish(spark, stateRoot, "overwrite", e0.schema.toDDL,
-            files, summary = starSummary(0, n0, c0))
-          (SnapTable.scan(spark, stateRoot), n0, 0, c0)
-      }
-    var executed = 0
-    while (!converged && round < maxIters && executed < roundsThisRun) {
-      // the durable write IS the round's materialization: stage the next
-      // generation's data files (one write job + one stats pass whose
-      // per-file row counts give the edge count for free), probe
-      // convergence against the staged files, then publish the manifest
-      // with the final (round, count, converged) summary. The r5 shape
-      // paid an extra localCheckpoint + count() materialization per round
-      // on top of the same parquet write; a crash between stage and
-      // publish orphans invisible files — identical recovery semantics.
-      val next = starRound(edges)
-      val files = SnapTable.stage(next, stateRoot)
-      val nextCount = files.map(_.rows).sum
-      val staged =
-        if (files.isEmpty) next.limit(0)
-        else spark.read.schema(next.schema).parquet(files.map(_.path): _*)
-      // probe against the CURRENT durable generation before replacing it
-      // (same count-carry + one-sided anti-join proof as componentsStar)
-      converged = nextCount == edgeCount &&
-        staged.join(edges, Seq("u", "v"), "left_anti").isEmpty
-      round += 1
-      SnapTable.publish(spark, stateRoot, "overwrite", next.schema.toDDL,
-        files, summary = starSummary(round, nextCount, converged))
-      edges = SnapTable.scan(spark, stateRoot)
-      edgeCount = nextCount
-      executed += 1
-    }
-    if (!converged && edgeCount > 0L && round >= maxIters)
-      log.warn(s"componentsStarResumable: no fixpoint after $maxIters rounds")
-    starLabels(ids, edges)
-  }
-
-  /** True when the durable fixpoint under `stateRoot` has converged. */
-  def componentsStarConverged(spark: org.apache.spark.sql.SparkSession,
-      stateRoot: String): Boolean =
-    graft.sources.SnapTable.currentVersion(spark, stateRoot).exists { v =>
-      parseStarSummary(
-        graft.sources.SnapTable.manifest(spark, stateRoot, v).summary)._3
-    }
-
-  private def starSummary(round: Int, edges: Long, converged: Boolean): String =
-    s"star round=$round edges=$edges converged=$converged"
-
-  private def parseStarSummary(s: String): (Int, Long, Boolean) =
-    raw"star round=(\d+) edges=(\d+) converged=(true|false)".r
-      .findFirstMatchIn(s)
-      .map(g => (g.group(1).toInt, g.group(2).toLong, g.group(3).toBoolean))
-      .getOrElse(throw new IllegalArgumentException(
-        s"not a componentsStarResumable state table (summary: '$s')"))
 
   /**
    * Keep-one-per-cluster resolution over the full corpus: every document
@@ -858,8 +744,8 @@ object Dedup {
    * representatives = the representative component's label; a group whose
    * rep sits in no rep pair is either a pure exact-dup clique (expanded
    * comp = its rep — `coalesce(comp, __rid)` below) or a singleton (comp =
-   * its own id = its rep). Pinned exhaustively against the expanded form in
-   * DedupSpec.
+   * its own id = its rep). Pinned against the expanded form, under both
+   * labelers, by a property over generated corpora in DedupSpec.
    */
   def nearDupKeepersCollapsed(docs: DataFrame, idCol: String,
       repPairs: DataFrame, members: DataFrame,

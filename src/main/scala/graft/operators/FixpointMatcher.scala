@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
  * reference's skip-set, ShstMatchingWorkDatabaseService.js:120-144), with a
  * per-pass candidate gate and optional geometry densification (the
  * attempt-2 analog; OSRM rerouting has no counterpart here — our matcher IS
- * the router replacement). Results are localCheckpoint'd per iteration so
- * lineage doesn't grow across passes.
+ * the router replacement). The passes run in [[Fixpoint.iterate]] over the
+ * unmatched set, so lineage doesn't grow across passes; "no progress"
+ * means a pass left the unmatched set unchanged.
  */
 object FixpointMatcher {
 
@@ -39,32 +40,31 @@ object FixpointMatcher {
    */
   def matchWithRetries(features: Dataset[TargetMapFeature], refs: Dataset[ShstReference],
       passes: Seq[MatchPass] = DefaultPasses): DataFrame = {
-    val spark = features.sparkSession
-    var unmatched: DataFrame = features.toDF().localCheckpoint(true)
-    var acc: Option[DataFrame] = None
-    var i = 0
-    var progress = true
-    while (i < passes.length && progress && !unmatched.isEmpty) {
-      val pass = passes(i)
+    val found = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // generation k = the features still unmatched after k passes; pass k
+    // runs on generation k and its matches are kept before k is released
+    val unmatched = Fixpoint.iterate("matchWithRetries", features.toDF(),
+        passes.length) { g =>
+      val pass = passes(g.round)
       val attempt =
-        if (pass.densifyGeometry) unmatched.withColumn("geometry", densify(col("geometry")))
-        else unmatched
+        if (pass.densifyGeometry) g.df.withColumn("geometry", densify(col("geometry")))
+        else g.df
       val typed = attempt.as[TargetMapFeature](features.encoder)
       val cand = ConflationPipeline.matchCandidates(typed, refs)
       val scored = ConflationPipeline.scoredCandidates(cand, pass.hausdorffKm)
-      val m = MatchPostProcessor(scored, iterationId = i).toDF().localCheckpoint(true)
-      val nNew = m.count()
-      progress = nNew > 0
-      if (progress) {
-        acc = Some(acc.map(_.unionByName(m)).getOrElse(m))
-        val matchedIds = m.select(col("targetMap"), col("targetMapId")).distinct()
-        unmatched = unmatched.join(matchedIds,
-          unmatched("targetMap") === matchedIds("targetMap") &&
-            unmatched("targetMapId") === matchedIds("targetMapId"),
-          "left_anti").localCheckpoint(true)
-      }
-      i += 1
+      val m = Fixpoint.materialize(MatchPostProcessor(scored, iterationId = g.round).toDF())
+      found += m
+      val matchedIds = m.select(col("targetMap"), col("targetMapId")).distinct()
+      g.df.join(matchedIds,
+        g.df("targetMap") === matchedIds("targetMap") &&
+          g.df("targetMapId") === matchedIds("targetMapId"),
+        "left_anti")
+    } { (prev, g) =>
+      // the schedule is exhausted, nothing is left to match, or a pass
+      // matched nothing (generations only shrink: equal count = equal set)
+      g.round == passes.length || g.rows == 0L || prev.exists(_.rows == g.rows)
     }
-    acc.getOrElse(spark.emptyDataFrame)
+    Fixpoint.release(unmatched)
+    found.reduceOption(_.unionByName(_)).getOrElse(features.sparkSession.emptyDataFrame)
   }
 }

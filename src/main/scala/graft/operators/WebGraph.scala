@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Shim
 
 /**
  * Web-graph centrality over the crawl's host link graph — the quality
@@ -13,8 +12,8 @@ import org.apache.spark.sql.graftshim.Shim
  * part of the training-data-pipeline extension family, same as the dedup
  * and sampling operators.
  *
- * Design constraint shared with the IVF k-means and the components loops:
- * the iteration must be DETERMINISTIC at any parallelism and exactly
+ * Design constraint shared with the IVF k-means and the component
+ * labelers: the iteration must be DETERMINISTIC at any parallelism and exactly
  * replayable by a relational oracle. Floating-point PageRank is neither —
  * partial-sum order changes low bits, and a SQL replay can't reproduce
  * them. So ranks are BIGINT micro-units and every division is integer
@@ -58,10 +57,11 @@ object WebGraph {
    *    partial-aggregated groupBy(dst) — contributions combine map-side,
    *    so a host with 10^7 in-links receives its partition's partial sums,
    *    not 10^7 rows;
-   *  - per-iteration lineage is truncated with an eager localCheckpoint
-   *    and the superseded generation's blocks are released
-   *    ([[Shim.unpersistLocalCheckpoint]]), so a 100-iteration run holds
-   *    exactly one rank generation, same as the components loops.
+   *  - the iterations run in [[Fixpoint.iterate]], which truncates each
+   *    generation's lineage and releases the superseded one, so a
+   *    100-iteration run holds exactly one rank generation; the node
+   *    table is released on return, leaving the result as the only
+   *    materialized table.
    */
   def pageRank(
       edgesIn: DataFrame,
@@ -92,31 +92,25 @@ object WebGraph {
     val edgeDeg = edges.join(deg, "src")
       .repartition(shufPart, col("src"))
       .persist()
-    val nodes = edges.select(col("src").as("node"))
+    val nodes = Fixpoint.materialize(edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
 
-    var ranks = nodes.select(col("node"), lit(scale).as("rank"))
-      .localCheckpoint(true)
-    var i = 0
-    while (i < iters) {
+    val init = nodes.select(col("node"), lit(scale).as("rank"))
+    val ranks = Fixpoint.iterate("pageRank", init, iters) { g =>
       val contribs = edgeDeg
-        .join(ranks, col("src") === col("node"))
+        .join(g.df, col("src") === col("node"))
         .select(col("dst"), expr("rank DIV outdeg").as("c"))
         .groupBy("dst")
         .agg(sum("c").as("s"))
-      val next = nodes
+      nodes
         .join(contribs, col("node") === col("dst"), "left")
         .select(col("node"),
           expr(s"(CAST(${15L * scale} AS BIGINT) + " +
             "85 * coalesce(s, CAST(0 AS BIGINT))) DIV 100").as("rank"))
-        .localCheckpoint(true) // eager: materialized before the old gen dies
-      Shim.unpersistLocalCheckpoint(ranks)
-      ranks = next
-      i += 1
-    }
+    } { (_, g) => g.round == iters }
     edgeDeg.unpersist()
+    Fixpoint.release(nodes)
     ranks
   }
 }

@@ -50,7 +50,7 @@ object SnapTable {
   /** `summary` is the Iceberg-snapshot-summary analog: a free-form
     * caller annotation committed ATOMICALLY with the file list (iterative
     * jobs persist their loop state in it — see
-    * Dedup.componentsStarResumable). Absent in pre-summary manifests,
+    * graft.operators.Fixpoint.Durable). Absent in pre-summary manifests,
     * parsed as "". */
   final case class Manifest(version: Int, parentVersion: Int, operation: String,
       schemaDdl: String, files: Seq[FileEntry], summary: String = "")
@@ -121,21 +121,6 @@ object SnapTable {
   }
 
   /**
-   * Commit `df` as the next snapshot. `op` is `"append"` (new files join the
-   * parent manifest's list) or `"overwrite"` (new files replace it). Data is
-   * written ONCE to a commit-private directory; only the manifest creation
-   * races, and a lost race costs a re-read + re-merge of the (tiny) parent
-   * manifest, never a data rewrite. Returns the committed version.
-   *
-   * `expectedParent` is the Iceberg "validate base snapshot" guard: when set,
-   * the commit succeeds only if the table head is still that version —
-   * otherwise it throws [[java.util.ConcurrentModificationException]] BEFORE
-   * publishing anything. Appends are commutative and never need it; an
-   * OVERWRITE whose content was derived from a read of version V (compaction,
-   * rewrite jobs) must pass `Some(V)`, or a concurrent append landing between
-   * the read and the commit would be silently dropped by the overwrite.
-   */
-  /**
    * First half of a commit: write `df`'s data files into a commit-private
    * directory and compute their per-file stats — NO manifest is published,
    * so the files are invisible to readers (and to crash recovery) until
@@ -166,6 +151,13 @@ object SnapTable {
     }.toSeq
   }
 
+  /**
+   * Commit `df` as the next snapshot: [[stage]] then [[publish]], whose
+   * doc gives the `op` and `expectedParent` contract. Data is written ONCE
+   * to a commit-private directory; only the manifest creation races, and a
+   * lost race costs a re-read + re-merge of the (tiny) parent manifest,
+   * never a data rewrite. Returns the committed version.
+   */
   def commit(df: DataFrame, root: String, op: String,
       statsCols: Seq[String] = Nil, summary: String = "",
       expectedParent: Option[Int] = None): Int = {
@@ -174,9 +166,22 @@ object SnapTable {
       stage(df, root, statsCols), summary, expectedParent)
   }
 
-  /** Second half of a commit: publish a manifest over files previously
-    * written by [[stage]]. Same atomic create-if-absent race protocol as
-    * [[commit]] (which is now stage + publish). */
+  /**
+   * Second half of a commit: publish a manifest over files previously
+   * written by [[stage]] as the next snapshot, and return its version.
+   * `op` is `"append"` (the files join the parent manifest's list) or
+   * `"overwrite"` (they replace it). The manifest is created atomically
+   * if absent; a writer that loses the race re-reads the new head,
+   * re-merges against it and retries.
+   *
+   * `expectedParent` is the Iceberg "validate base snapshot" guard: when set,
+   * the commit succeeds only if the table head is still that version —
+   * otherwise it throws [[java.util.ConcurrentModificationException]] BEFORE
+   * publishing anything. Appends are commutative and never need it; an
+   * OVERWRITE whose content was derived from a read of version V (compaction,
+   * rewrite jobs) must pass `Some(V)`, or a concurrent append landing between
+   * the read and the commit would be silently dropped by the overwrite.
+   */
   def publish(spark: SparkSession, root: String, op: String, ddl: String,
       newFiles: Seq[FileEntry], summary: String = "",
       expectedParent: Option[Int] = None): Int = {

@@ -15,14 +15,15 @@ object Shim {
 
   /**
    * Release the block-manager copy behind a `localCheckpoint`ed Dataset.
-   * Iterative fixpoint loops (connected components) checkpoint a new
-   * generation per round; without this, every superseded generation's
-   * blocks linger until GC — bounded by round count, but at web scale each
-   * generation is the full edge set. ONLY safe on a generation nothing
-   * still references: a local checkpoint has no lineage to recompute from,
-   * so unpersisting a live one loses data (callers unpersist generation
-   * k−1 only after k is eagerly materialized and the convergence probe on
-   * k−1 has run). No-op on plans that aren't a materialized checkpoint.
+   * `graft.operators.Fixpoint` materializes a new generation per round and
+   * releases the superseded one through this; without it every superseded
+   * generation's blocks linger until GC — bounded by round count, but at
+   * web scale each generation is the full edge set. ONLY safe on a table
+   * nothing still references: a local checkpoint has no lineage to
+   * recompute from, so unpersisting a live one loses data (the loop
+   * releases generation k−1 only after k is eagerly materialized and the
+   * convergence probe has read both). No-op on plans that aren't a
+   * materialized checkpoint.
    */
   def unpersistLocalCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     df match {
