@@ -1,83 +1,61 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /**
- * Two-cluster-size scaling evidence (BASELINE.json north_rule): run the
- * IDENTICAL conflation job on IDENTICAL deterministic input at N and 4N
- * parallelism (local[8] vs local[32] — the sandbox stand-in for N and 4N
- * executors per BASELINE.md). Each invocation measures ONE parallelism
- * level in a fresh JVM (same-JVM back-to-back sessions contaminate each
- * other through heap state); tools/scaling_bench.sh runs both and computes
- * efficiency = (T_N / T_4N) / 4.
+ * One parallelism level of the two-cluster-size scaling evidence
+ * (BASELINE.json north_rule): the IDENTICAL conflation job on IDENTICAL
+ * deterministic input, measured in a fresh JVM per level (same-JVM
+ * back-to-back sessions contaminate each other through heap state).
+ * tools/scaling_bench.sh runs the levels N and 4N through
+ * tools/spark_submit_scaling.sh and computes efficiency = (T_N / T_4N) / 4.
  *
- * Usage: sbt "runMain graft.ScalingBench <cpus> [nPages] [nRoads]"
+ * Usage: tools/spark_submit_scaling.sh <cpus> [nPages] [nRoads] [spark-submit options]
+ *
+ * The session is worked out from how the level was launched (see [[plan]]);
+ * shuffle files go where Spark's own SPARK_LOCAL_DIRS points.
  */
 object ScalingBench {
 
-  def run(cpus: Int, nPages: Long, nRoads: Int): (Long, Long, Double) = {
-    val spark = session(cpus)
-    try Bench.conflationThroughput(spark, nPages, nRoads)
-    finally spark.stop()
-  }
+  /** A level's session: its master, whether the warm-up runs inside the
+    * measured session, and the SQL conf every level pins. */
+  final case class Plan(master: String, warmInSession: Boolean, conf: Map[String, String])
 
   /**
-   * Warm-up and measurement INSIDE one session — executor-JIT parity for
-   * local-cluster masters (`SPARK_GRAFT_WARM_IN_SESSION=1`). In thread
-   * mode the warm-up session and the measured session share one JVM, so
-   * the measured run executes JIT-warm; under a local-cluster master a
-   * session's executors DIE with it, a separate warm-up session warms
-   * nothing, and the measured run pays the full interpreter/C2 ramp on
-   * every fresh executor JVM (~2.5× at 6.4M observed). Running the
-   * small-scale warm-up through the SAME session's executors restores the
-   * discipline the thread-mode protocol already has; the measured call is
-   * identical ([[Bench.conflationThroughput]] clears SQL caches first).
+   * The submitted `spark.master`, else `local[cpus]`. AQE is off (no
+   * driver-serial replanning inside the measurement) and `cpus` shuffle
+   * partitions keep the plan the same at every master.
+   *
+   * The warm-up (JIT + codegen caches, at small scale) runs in its own
+   * session under a `local[…]` master: that session shares the measured
+   * session's JVM, so the measured run executes JIT-warm. Under any other
+   * master (`local-cluster[W,C,MB]`: W separate executor JVMs) a session's
+   * executors die with it, so a separate warm-up session warms nothing and
+   * the measured run would pay the interpreter/C2 ramp on every fresh
+   * executor (~2.5× at 6.4M observed); there the warm-up runs through the
+   * measured session's own executors (SCALING_r5_cluster.json).
    */
-  def runShared(cpus: Int, nPages: Long, nRoads: Int): (Long, Long, Double) = {
-    val spark = session(cpus)
-    try {
-      Bench.conflationThroughput(spark, 2000, 200)
-      Bench.conflationThroughput(spark, nPages, nRoads)
-    } finally spark.stop()
+  def plan(submittedMaster: Option[String], cpus: Int): Plan = {
+    val master = submittedMaster.getOrElse(s"local[$cpus]")
+    Plan(master, warmInSession = !master.matches("""local(\[.*\])?"""),
+      Map("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> cpus.toString,
+        "spark.sql.session.timeZone" -> "UTC",
+        "spark.ui.enabled" -> "false"))
   }
 
-  private def session(cpus: Int): org.apache.spark.sql.SparkSession = {
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus.toString)
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/tmp")
-    // on tmpfs, leaked shuffle dirs from killed runs are leaked RAM that
-    // degrades this measurement — scaling runs are exclusive, so anything
-    // already there is stale (same rationale as Bench.buildSession)
-    if (localDir.startsWith("/dev/shm")) {
-      val d = new java.io.File(localDir); d.mkdirs(); Bench.wipeStale(d)
-    }
-    // SPARK_GRAFT_MASTER overrides the in-process local[cpus] master —
-    // the multi-executor literal: `local-cluster[W,C,MB]` spawns W separate
-    // executor JVMs with C cores each, so the same job runs with real
-    // executor boundaries (serialized task dispatch, remote shuffle fetch,
-    // per-executor heaps) instead of threads sharing one JVM. Used by
-    // tools/local_cluster_scaling.sh for the north rule's "multi-executor
-    // cluster" phrasing; `cpus` stays the partition/reporting count.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.inMemoryColumnarStorage.compressed",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_COMPRESS", "true"))
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // extra conf pass-through for measurement experiments, e.g.
-    // SPARK_GRAFT_EXTRA_CONF="spark.memory.offHeap.enabled=true;spark.memory.offHeap.size=16g"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      val i = kv.indexOf('=')
-      if (i > 0) builder.config(kv.take(i).trim, kv.drop(i + 1).trim)
-    })
-    val spark = builder.getOrCreate()
+  /** Conflation throughput in one session; with `warmFirst` the small
+    * warm-up runs in that session first ([[Bench.conflationThroughput]]
+    * clears SQL caches before each measured call). */
+  def run(p: Plan, nPages: Long, nRoads: Int, warmFirst: Boolean): (Long, Long, Double) = {
+    val spark = SparkSession.builder().master(p.master).config(p.conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (sys.env.contains("SPARK_GRAFT_STAGE_REPORT")) addStageReport(spark)
-    spark
+    try {
+      if (warmFirst) Bench.conflationThroughput(spark, 2000, 200)
+      Bench.conflationThroughput(spark, nPages, nRoads)
+    } finally spark.stop()
   }
 
   /** Opt-in per-stage diagnostic (SPARK_GRAFT_STAGE_REPORT=1): stage wall
@@ -135,15 +113,10 @@ object ScalingBench {
     val cpus = args(0).toInt
     val nPages = if (args.length > 1) args(1).toLong else 400000L
     val nRoads = if (args.length > 2) args(2).toInt else 16000
-    val warmShared = sys.env.contains("SPARK_GRAFT_WARM_IN_SESSION")
-    // warm-up (JIT + codegen caches) at small scale, same parallelism —
-    // in its own session for the thread-mode protocol, in the MEASURED
-    // session under a local-cluster master (see runShared)
-    if (!warmShared) run(cpus, 2000, 200)
+    val p = plan(new SparkConf().getOption("spark.master"), cpus)
+    if (!p.warmInSession) run(p, 2000, 200, warmFirst = false)
     val s0 = cpuStat()
-    val (segs, tiles, sec) =
-      if (warmShared) runShared(cpus, nPages, nRoads)
-      else run(cpus, nPages, nRoads)
+    val (segs, tiles, sec) = run(p, nPages, nRoads, warmFirst = p.warmInSession)
     val s1 = cpuStat()
     val d = s1.zip(s0).map { case (a, b) => (a - b).toDouble }
     val total = math.max(d.sum, 1.0)

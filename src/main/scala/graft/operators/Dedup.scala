@@ -53,23 +53,6 @@ object Dedup {
       s"sequence(1, greatest(size(ws) - ${n - 1}, 1)), " +
       s"i -> array_join(slice(ws, i, $n), ' '))))), 1)")
 
-  /** MinHash signature: numHashes mins of xxhash64(shingle, i).
-    * (Array-column form; the pair pipeline below uses the explode+aggregate
-    * form instead — higher-order functions are interpreted, a 64-expression
-    * min aggregate over exploded shingles is whole-stage codegen'd.) */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    array((0 until numHashes).map(i =>
-      array_min(transform(shingles, s => xxhash64(s, lit(i))))): _*)
-
-  /** LSH band keys: one hash per band of `rowsPerBand` signature values. */
-  def lshBands(sig: Column, numHashes: Int, rowsPerBand: Int): Column = {
-    val bands = numHashes / rowsPerBand
-    array((0 until bands).map { b =>
-      val parts = (0 until rowsPerBand).map(r => sig.getItem(b * rowsPerBand + r))
-      xxhash64((parts :+ lit(b)): _*)
-    }: _*)
-  }
-
   /** Exact Jaccard of two pre-distinct shingle arrays. */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b))

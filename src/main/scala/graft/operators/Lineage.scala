@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.SnapTable
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /**
  * Per-partition lineage + metrics checkpoints enabling exact resume
@@ -20,31 +22,27 @@ import org.apache.spark.sql.functions._
  *     and THEN appends the ledger rows (n_rows + order-independent checksum
  *     per unit) — the ledger row is the commit point
  *
- * On a cluster the ledger would be an Iceberg table with snapshot isolation;
- * on local parquet the same dataflow applies with directory atomicity.
+ * The ledger is a [[graft.sources.SnapTable]] — the miniature of the
+ * Iceberg table a cluster would use: each increment lands as ONE atomic
+ * snapshot (create-exclusive manifest `v(N+1)`), where a bare parquet
+ * append can expose a half-written file list on object stores. Readers are
+ * snapshot-isolated from in-flight commits, and concurrent committers of
+ * DIFFERENT unit batches serialize through the manifest CAS instead of
+ * racing the directory.
  */
 object Lineage {
 
-  private def emptyKeys(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("unit_key",
-          org.apache.spark.sql.types.StringType))))
-
-  /** Completed unit keys from the ledger (empty-safe). */
-  def completedKeys(spark: SparkSession, ledgerPath: String): DataFrame = {
-    val empty = emptyKeys(spark)
-    try {
-      val df = spark.read.parquet(ledgerPath)
-      if (df.columns.contains("unit_key")) df.select("unit_key").distinct() else empty
-    } catch { case _: Throwable => empty }
-  }
+  /** Completed unit keys from the ledger (empty when it has no snapshot). */
+  def completedKeys(spark: SparkSession, ledgerRoot: String): DataFrame =
+    if (SnapTable.currentVersion(spark, ledgerRoot).isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(Seq(StructField("unit_key", StringType))))
+    else SnapTable.scan(spark, ledgerRoot).select("unit_key").distinct()
 
   /** Work rows whose unit key has no ledger entry yet (exact-resume filter). */
-  def remaining(work: DataFrame, keyCol: String, ledgerPath: String): DataFrame =
+  def remaining(work: DataFrame, keyCol: String, ledgerRoot: String): DataFrame =
     work.join(
-      completedKeys(work.sparkSession, ledgerPath)
+      completedKeys(work.sparkSession, ledgerRoot)
         .withColumnRenamed("unit_key", keyCol),
       Seq(keyCol), "left_anti")
 
@@ -57,21 +55,13 @@ object Lineage {
       .agg(count(lit(1)).as("n_rows"), expr("bit_xor(__rh)").as("checksum"))
 
   /**
-   * Commit processed units: per-unit dynamic-partition overwrite of results,
-   * then append ledger rows (with row counts + checksums as the per-partition
-   * metrics channel). Returns the ledger increment for inspection.
+   * Commit processed units: per-unit dynamic-partition overwrite of results
+   * (re-processing a crashed unit replaces, never duplicates), then the
+   * ledger rows (row counts + checksums as the per-partition metrics
+   * channel) as one snapshot. Returns the ledger increment for inspection.
    */
   def commit(results: DataFrame, keyCol: String, resultPath: String,
-      ledgerPath: String, runId: String): DataFrame = {
-    writeResults(results, keyCol, resultPath)
-    val ledger = unitMetrics(results, keyCol).withColumn("run_id", lit(runId))
-    ledger.write.mode("append").parquet(ledgerPath)
-    ledger
-  }
-
-  /** Dynamic-partition overwrite of the per-unit results (re-processing a
-    * crashed unit replaces, never duplicates). */
-  private def writeResults(results: DataFrame, keyCol: String, resultPath: String): Unit = {
+      ledgerRoot: String, runId: String): DataFrame = {
     val spark = results.sparkSession
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -80,72 +70,26 @@ object Lineage {
     } finally {
       prev.foreach(spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
     }
-  }
-
-  // ---- ledger-on-SnapTable variants ----------------------------------------
-  // The scaladoc above notes "on a cluster the ledger would be an Iceberg
-  // table with snapshot isolation" — these are that form, over
-  // [[graft.sources.SnapTable]]: the ledger increment lands as ONE atomic
-  // snapshot commit (create-exclusive manifest), where a bare parquet append
-  // can expose a half-written file list on object stores. Readers of the
-  // ledger are snapshot-isolated from in-flight commits, and concurrent
-  // committers of DIFFERENT unit batches serialize through the manifest CAS
-  // instead of racing the directory.
-
-  /** Completed unit keys from a SnapTable ledger (empty-safe). */
-  def completedKeysSnap(spark: SparkSession, ledgerRoot: String): DataFrame =
-    if (graft.sources.SnapTable.currentVersion(spark, ledgerRoot).isEmpty)
-      emptyKeys(spark)
-    else graft.sources.SnapTable.scan(spark, ledgerRoot)
-      .select("unit_key").distinct()
-
-  /** [[remaining]] against a SnapTable ledger. */
-  def remainingSnap(work: DataFrame, keyCol: String, ledgerRoot: String): DataFrame =
-    work.join(
-      completedKeysSnap(work.sparkSession, ledgerRoot)
-        .withColumnRenamed("unit_key", keyCol),
-      Seq(keyCol), "left_anti")
-
-  /** [[commit]] with the ledger increment landing as one atomic snapshot. */
-  def commitSnap(results: DataFrame, keyCol: String, resultPath: String,
-      ledgerRoot: String, runId: String): DataFrame = {
-    writeResults(results, keyCol, resultPath)
     val ledger = unitMetrics(results, keyCol).withColumn("run_id", lit(runId))
-    graft.sources.SnapTable.append(ledger, ledgerRoot)
+    SnapTable.append(ledger, ledgerRoot)
     ledger
-  }
-
-  /** [[runIncremental]] over a SnapTable ledger: identical convergence, with
-    * the commit point upgraded from "parquet files appeared" to "manifest
-    * v(N+1) exists". */
-  def runIncrementalSnap(work: DataFrame, keyCol: String, resultPath: String,
-      ledgerRoot: String, runId: String)(process: DataFrame => DataFrame): Long = {
-    val todo = remainingSnap(work, keyCol, ledgerRoot)
-    if (todo.isEmpty) 0L
-    else {
-      val out = process(todo)
-      require(out.columns.contains(keyCol),
-        s"process() must preserve the unit key column '$keyCol'")
-      commitSnap(out, keyCol, resultPath, ledgerRoot, runId)
-        .agg(sum("n_rows")).collect()(0).getLong(0)
-    }
   }
 
   /**
    * Run `process` over only the not-yet-committed work units and commit the
    * output. Calling this repeatedly after partial failures converges to the
    * complete result with no recomputation of finished units and no
-   * duplicates (exact resume).
+   * duplicates (exact resume); a call with nothing left commits no snapshot.
    */
   def runIncremental(work: DataFrame, keyCol: String, resultPath: String,
-      ledgerPath: String, runId: String)(process: DataFrame => DataFrame): Long = {
-    val todo = remaining(work, keyCol, ledgerPath)
+      ledgerRoot: String, runId: String)(process: DataFrame => DataFrame): Long = {
+    val todo = remaining(work, keyCol, ledgerRoot)
     if (todo.isEmpty) 0L
     else {
       val out = process(todo)
       require(out.columns.contains(keyCol),
         s"process() must preserve the unit key column '$keyCol'")
-      commit(out, keyCol, resultPath, ledgerPath, runId)
+      commit(out, keyCol, resultPath, ledgerRoot, runId)
         .agg(sum("n_rows")).collect()(0).getLong(0)
     }
   }

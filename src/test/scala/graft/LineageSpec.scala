@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Lineage, ConflationPipeline}
+import graft.sources.SnapTable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -40,7 +41,7 @@ class LineageSpec extends AnyFunSuite {
     val (res2, led2) = freshDirs()
     val partial = workUnits.filter(col("unit").isin("road0", "road1"))
     Lineage.runIncremental(partial, "unit", res2, led2, "run1")(process)
-    assert(spark.read.parquet(led2).select("unit_key").distinct().count() == 2)
+    assert(SnapTable.scan(spark, led2).select("unit_key").distinct().count() == 2)
 
     // resume with the FULL work list: only the 3 remaining units process
     val n2 = Lineage.runIncremental(workUnits, "unit", res2, led2, "run2")(process)
@@ -55,8 +56,8 @@ class LineageSpec extends AnyFunSuite {
     assert(Lineage.runIncremental(workUnits, "unit", res2, led2, "run3")(process) == 0L)
 
     // ledger checksums match between the two paths (per-partition metrics)
-    val l1 = spark.read.parquet(led1).select("unit_key", "n_rows", "checksum")
-    val l2 = spark.read.parquet(led2).select("unit_key", "n_rows", "checksum")
+    val l1 = SnapTable.scan(spark, led1).select("unit_key", "n_rows", "checksum")
+    val l2 = SnapTable.scan(spark, led2).select("unit_key", "n_rows", "checksum")
     assert(l1.exceptAll(l2).count() == 0 && l2.exceptAll(l1).count() == 0)
   }
 
@@ -81,27 +82,27 @@ class LineageSpec extends AnyFunSuite {
 
     val (res2, led2) = freshDirs()
     val partial = workUnits.filter(col("unit").isin("road0", "road1"))
-    Lineage.runIncrementalSnap(partial, "unit", res2, led2, "run1")(process)
+    Lineage.runIncremental(partial, "unit", res2, led2, "run1")(process)
     // first increment = snapshot v1
-    assert(graft.sources.SnapTable.currentVersion(spark, led2).contains(1))
-    val n2 = Lineage.runIncrementalSnap(workUnits, "unit", res2, led2, "run2")(process)
+    assert(SnapTable.currentVersion(spark, led2).contains(1))
+    val n2 = Lineage.runIncremental(workUnits, "unit", res2, led2, "run2")(process)
     assert(n2 > 0 && n2 < full.count())
     // second increment = snapshot v2; the ledger content is the SAME
-    // (unit_key, n_rows, checksum) rows the parquet-append path produces
-    assert(graft.sources.SnapTable.currentVersion(spark, led2).contains(2))
-    val l1 = spark.read.parquet(led1).select("unit_key", "n_rows", "checksum")
-    val l2 = graft.sources.SnapTable.scan(spark, led2)
+    // (unit_key, n_rows, checksum) rows the single-shot run produces
+    assert(SnapTable.currentVersion(spark, led2).contains(2))
+    val l1 = SnapTable.scan(spark, led1).select("unit_key", "n_rows", "checksum")
+    val l2 = SnapTable.scan(spark, led2)
       .select("unit_key", "n_rows", "checksum")
     assert(l1.exceptAll(l2).count() == 0 && l2.exceptAll(l1).count() == 0)
     // results converge to the single-shot run
     val resumed = spark.read.parquet(res2)
     assert(resumed.exceptAll(full).count() == 0 && full.exceptAll(resumed).count() == 0)
     // third call: nothing left, and no empty snapshot is committed
-    assert(Lineage.runIncrementalSnap(workUnits, "unit", res2, led2, "run3")(process) == 0L)
-    assert(graft.sources.SnapTable.currentVersion(spark, led2).contains(2))
+    assert(Lineage.runIncremental(workUnits, "unit", res2, led2, "run3")(process) == 0L)
+    assert(SnapTable.currentVersion(spark, led2).contains(2))
     // a ledger READER is snapshot-isolated: pinning v1 still shows exactly
     // the first increment even after later commits
-    assert(graft.sources.SnapTable.scan(spark, led2, asOf = Some(1))
+    assert(SnapTable.scan(spark, led2, asOf = Some(1))
       .select("unit_key").distinct().count() == 2)
   }
 }

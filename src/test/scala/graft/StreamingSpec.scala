@@ -113,13 +113,14 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted
     assert(after2.sameElements(after1))
     // partial-bucket crash: wipe 2 of the committed buckets' LEDGER rows
-    // (results written, ledger append died) — replay recommits exactly them
-    val keys = spark.read.parquet(led).select("unit_key").distinct()
+    // (results written, ledger commit died) — replay recommits exactly them
+    val keys = graft.sources.SnapTable.scan(spark, led).select("unit_key").distinct()
       .as[String].collect().sorted
     val crashed = keys.take(2).toSet
-    val survivors = spark.read.parquet(led).filter(!col("unit_key").isin(crashed.toSeq: _*))
+    val survivors = graft.sources.SnapTable.scan(spark, led)
+      .filter(!col("unit_key").isin(crashed.toSeq: _*))
     val led2 = s"$base/ledger2"
-    survivors.write.parquet(led2)
+    graft.sources.SnapTable.append(survivors, led2)
     val n3 = StreamingOps.commitCandidateBatch(cand, 0L, res, led2)
     assert(n3 > 0 && n3 < n1, s"recommitted $n3 of $n1")
     val after3 = spark.read.parquet(res).select("feature_id", "ref_id")

@@ -1,26 +1,35 @@
 #!/bin/bash
-# North-rule literal path: the scaling job driven by spark-submit — the
-# exact graft.ScalingBench main the sbt path runs, as a packaged jar on a
-# fresh JVM per parallelism level. The library has no dependencies beyond
-# Spark itself, so the plain `sbt -batch package` jar submits as-is.
+# One graft.ScalingBench level through spark-submit, on a fresh JVM — the one
+# launch path of the scaling evidence (tools/scaling_bench.sh sends every
+# probe and every level through here):
 #
 #   sbt -batch package
-#   tools/spark_submit_scaling.sh <cpus> [pages] [roads]
+#   tools/spark_submit_scaling.sh <cpus> [pages] [roads] [spark-submit options...]
 #
-# The session builder pins master=local[cpus] internally (identical to the
-# sbt path), so the submitted app measures the same thing byte-for-byte;
-# SPARK_GRAFT_* env knobs (PARTS, AQE, LOCAL_DIR) pass through unchanged.
+# The master is local[cpus]; options given after the roads are passed to
+# spark-submit after the defaults, so they win. The multi-executor literal
+# (SCALING_r5_cluster.json: 4 executor JVMs of 2 cores) is
+#
+#   tools/spark_submit_scaling.sh 8 6400000 256000 \
+#     --master 'local-cluster[4,2,16384]' --driver-memory 16g \
+#     --conf spark.executor.memory=14336m \
+#     --conf spark.driver.extraJavaOptions='-XX:+AlwaysPreTouch -XX:ActiveProcessorCount=4' \
+#     --conf spark.executor.extraJavaOptions='-XX:+AlwaysPreTouch -Xms14336m -XX:ActiveProcessorCount=2'
+#
+# and ScalingBench then runs its warm-up inside the measured session. The
+# driver heap is SPARK_DRIVER_MEM, by default half the host's memory clamped
+# to 2-8g. Prints the level's JSON line on stdout.
 set -eu
 cd "$(dirname "$0")/.."
-CPUS=${1:-8}; PAGES=${2:-400000}; ROADS=${3:-16000}
-JAR=$(ls -t target/scala-2.13/*.jar 2>/dev/null | head -1)
-if [ -z "$JAR" ]; then
-  echo "no jar found — run 'sbt -batch package' first" >&2
+CPUS=${1:?usage: tools/spark_submit_scaling.sh <cpus> [pages] [roads] [spark-submit options...]}
+PAGES=${2:-400000}; ROADS=${3:-16000}
+shift $(($# < 3 ? $# : 3))
+JAR=target/scala-2.13/npmrdsosmconflationspark_2.13-0.1.0.jar
+if [ ! -f "$JAR" ]; then
+  echo "no $JAR: run 'sbt -batch package' first" >&2
   exit 1
 fi
-exec /opt/spark/bin/spark-submit \
-  --master "local[$CPUS]" \
-  --driver-memory "${SPARK_DRIVER_MEM:-48g}" \
-  --conf spark.driver.extraJavaOptions="-XX:+AlwaysPreTouch" \
-  --class graft.ScalingBench \
-  "$JAR" "$CPUS" "$PAGES" "$ROADS"
+MEM=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)}
+exec /opt/spark/bin/spark-submit --master "local[$CPUS]" --driver-memory "$MEM" \
+  --conf spark.driver.extraJavaOptions=-XX:+AlwaysPreTouch \
+  "$@" --class graft.ScalingBench "$JAR" "$CPUS" "$PAGES" "$ROADS"
