@@ -1,354 +1,151 @@
 package graft.functions
 
+import java.lang.reflect.{InvocationTargetException, Method, Modifier}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
 
 /**
  * Codegen-capable Catalyst expressions over the geo kernel.
  *
  * These are the engine's custom scalar surface (SURVEY.md §2.8 F1–F13 and
- * §2.11): each generates a single static call into [[GeoFn]], so they stay
- * inside whole-stage codegen spans (no UDF boxing, no CodegenFallback).
- *
- * Reference semantics mirrored (citations into /root/reference):
- *  - GeodesicLength  ← turf.length        (getShstReferenceAuxProperties.js:89-92)
- *  - Haversine       ← turf.distance      (addMegaLevelMetadata.js:19-29)
- *  - FinalBearing    ← turf.bearing final (src/loaders/getTargetMapFeatureBearing.js:4-15)
- *  - LocateAlong     ← turf.nearestPointOnLine().properties.location
- *                                          (getOffsetsAlongShstRefForTargetMapSegments.js:31-37)
- *  - PointAlong      ← turf.along         (partitionShstReferenceByTargetMapsMatches/index.js:81)
- *  - LineSliceAlong  ← turf.lineSliceAlong (getOffsetsAlongShstRefForTargetMapSegments.js:45-57)
- *  - WithinRing      ← turf.booleanWithin (ShStReferenceFeatureIterator.js:26-31)
- *  - GeoProxKey      ← interleaved-hex curve (src/utils/getGeoProximityKey.js:5-19)
- *  - CellEncode/Ring/Cover, Frechet/Hausdorff: new (replace the external
- *    shst-match CLI, SharedStreetsMatcher.js:36-144, with cell-keyed joins +
- *    similarity scoring per BASELINE.json north_star).
+ * §2.11). Every plain kernel function is one row of [[GeoCall.table]] and
+ * one [[GeoCall]] node: a null-intolerant call of a single static method of
+ * [[GeoFn]], so it stays inside whole-stage codegen spans (no UDF boxing,
+ * no CodegenFallback). The Column API (`geo.scala`), both SQL registries
+ * (`geo.register`, `GraftExtensions`) and the spatial rewrite read the table.
  */
 
-private[functions] object ExprHelp {
+/** One row of [[GeoCall.table]]: SQL function `name` is the null-intolerant
+  * call `GeoFn.<method>(args)` returning `dataType`. Arity and argument
+  * types are the method's own. */
+final case class GeoKernel(name: String, method: String, dataType: DataType) {
+
+  /** The [[GeoFn]] static method behind both evaluation paths: codegen emits
+    * a call of it by name, `eval` invokes it. Resolved once per JVM. */
+  @transient lazy val target: Method =
+    Class.forName(GeoKernel.Owner).getMethods
+      .filter(m => m.getName == method && Modifier.isStatic(m.getModifiers)) match {
+      case Array(m) => m
+      case ms => throw new IllegalArgumentException(
+        s"$name: ${GeoKernel.Owner}.$method must name one static method, found ${ms.length}")
+    }
+
+  def arity: Int = target.getParameterCount
+
+  def apply(args: Expression*): GeoCall = GeoCall(this, args)
+}
+
+object GeoKernel {
+  private[functions] val Owner = "graft.functions.GeoFn"
+}
+
+/** A call of one [[GeoKernel]] row: NULL iff an argument is NULL. */
+case class GeoCall(kernel: GeoKernel, children: Seq[Expression]) extends Expression {
+  require(children.length == kernel.arity,
+    s"${kernel.name} expects ${kernel.arity} argument(s), got ${children.length}")
+
+  override def dataType: DataType = kernel.dataType
+  override def nullable: Boolean = children.exists(_.nullable)
+  override def foldable: Boolean = children.forall(_.foldable)
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = kernel.name
+  // print `name(args)`, not the row
+  override protected def flatArguments: Iterator[Any] = children.iterator
+
+  override def eval(input: InternalRow): Any = {
+    val args = new Array[AnyRef](children.length)
+    var i = 0
+    while (i < args.length) {
+      val v = children(i).eval(input)
+      if (v == null) return null
+      args(i) = v.asInstanceOf[AnyRef]
+      i += 1
+    }
+    try kernel.target.invoke(null, args: _*)
+    catch { case e: InvocationTargetException => throw e.getCause }
+  }
+
+  // the N-ary form of Binary/Ternary/QuaternaryExpression.defineCodeGen:
+  // each argument is evaluated and null-checked in turn, then one static call
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val gens = children.map(_.genCode(ctx))
+    val call = s"${ev.value} = ${GeoKernel.Owner}.${kernel.method}(" +
+      gens.map(_.value).mkString(", ") + ");"
+    val decl = s"${CodeGenerator.javaType(dataType)} ${ev.value} = " +
+      s"${CodeGenerator.defaultValue(dataType)};"
+    if (nullable) {
+      val guarded = children.zip(gens).foldRight(s"${ev.isNull} = false;\n$call") {
+        case ((c, g), inner) => s"${g.code}\n" + ctx.nullSafeExec(c.nullable, g.isNull)(inner)
+      }
+      ev.copy(code = code"""
+        boolean ${ev.isNull} = true;
+        $decl
+        $guarded""")
+    } else {
+      ev.copy(code = code"""
+        ${gens.map(_.code).reduce(_ + _)}
+        $decl
+        $call""", isNull = FalseLiteral)
+    }
+  }
+
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): GeoCall =
+    copy(children = c)
+}
+
+object GeoCall {
   val lineType: DataType = ArrayType(ArrayType(DoubleType))
-}
+  private val points = ArrayType(DoubleType, containsNull = false)
+  private val cells = ArrayType(LongType, containsNull = false)
 
-case class GeodesicLength(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "geodesic_length_km"
-  protected override def nullSafeEval(v: Any): Any =
-    GeoFn.lengthKm(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.GeoFn.lengthKm($c)")
-  protected override def withNewChildInternal(c: Expression): GeodesicLength = copy(c)
-}
+  /** Every plain kernel function. Reference semantics mirrored (citations
+    * into the reference implementation); the cell and curve-similarity rows
+    * are new: they replace the external shst-match CLI
+    * (SharedStreetsMatcher.js:36-144) with cell-keyed joins + similarity
+    * scoring per BASELINE.json north_star. */
+  val table: Seq[GeoKernel] = Seq(
+    // turf.length (getShstReferenceAuxProperties.js:89-92)
+    GeoKernel("geodesic_length_km", "lengthKm", DoubleType),
+    // turf.distance (addMegaLevelMetadata.js:19-29)
+    GeoKernel("haversine_km", "haversineKm", DoubleType),
+    // turf.bearing final (src/loaders/getTargetMapFeatureBearing.js:4-15)
+    GeoKernel("final_bearing", "finalBearing", IntegerType),
+    GeoKernel("bearing_delta", "bearingDelta", DoubleType),
+    // turf.nearestPointOnLine().properties.location
+    // (getOffsetsAlongShstRefForTargetMapSegments.js:31-37)
+    GeoKernel("locate_along", "locateAlong", DoubleType),
+    // array(lon, lat, distAlongKm, distToKm)
+    GeoKernel("nearest_point_on_line", "nearestPoint", points),
+    // turf.along (partitionShstReferenceByTargetMapsMatches/index.js:81)
+    GeoKernel("point_along", "pointAlong", points),
+    // turf.lineSliceAlong (getOffsetsAlongShstRefForTargetMapSegments.js:45-57)
+    GeoKernel("line_slice_along", "lineSliceAlong", lineType),
+    GeoKernel("densify", "densify", lineType),
+    GeoKernel("cell_encode", "cellEncode", LongType),
+    GeoKernel("cell_ring", "cellRing", cells),
+    GeoKernel("cell_disk", "cellDisk", cells),
+    GeoKernel("cell_cover_line", "cellCoverLine", cells),
+    // interleaved-hex curve (src/utils/getGeoProximityKey.js:5-19)
+    GeoKernel("geoprox_key", "geoProxKey", StringType),
+    // turf.booleanWithin (ShStReferenceFeatureIterator.js:26-31): every
+    // vertex of the line lies inside the ring
+    GeoKernel("within_ring", "withinRing", BooleanType),
+    GeoKernel("point_in_ring", "pointInRing", BooleanType),
+    GeoKernel("frechet_km", "frechetKm", DoubleType),
+    GeoKernel("hausdorff_km", "hausdorffKm", DoubleType),
+    // max distance (km) from any vertex of the first line to the second:
+    // small iff the first lies along the second
+    GeoKernel("directed_hausdorff_km", "directedHausdorffKm", DoubleType),
+    GeoKernel("tile_x", "tileX", LongType),
+    GeoKernel("tile_y", "tileY", LongType))
 
-case class Haversine(lon1: Expression, lat1: Expression, lon2: Expression, lat2: Expression)
-    extends QuaternaryExpression {
-  override def first: Expression = lon1
-  override def second: Expression = lat1
-  override def third: Expression = lon2
-  override def fourth: Expression = lat2
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "haversine_km"
-  protected override def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    GeoFn.haversineKm(a.asInstanceOf[Double], b.asInstanceOf[Double],
-      c.asInstanceOf[Double], d.asInstanceOf[Double])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c, d) => s"graft.functions.GeoFn.haversineKm($a, $b, $c, $d)")
-  protected override def withNewChildrenInternal(
-      a: Expression, b: Expression, c: Expression, d: Expression): Haversine =
-    copy(a, b, c, d)
-}
+  private val byName = table.map(k => k.name -> k).toMap
 
-case class FinalBearing(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "final_bearing"
-  protected override def nullSafeEval(v: Any): Any =
-    GeoFn.finalBearing(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.GeoFn.finalBearing($c)")
-  protected override def withNewChildInternal(c: Expression): FinalBearing = copy(c)
-}
-
-case class BearingDelta(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "bearing_delta"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    GeoFn.bearingDelta(a.asInstanceOf[Double], b.asInstanceOf[Double])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.GeoFn.bearingDelta($a, $b)")
-  protected override def withNewChildrenInternal(l: Expression, r: Expression): BearingDelta =
-    copy(l, r)
-}
-
-case class LocateAlong(line: Expression, lon: Expression, lat: Expression)
-    extends TernaryExpression {
-  override def first: Expression = line
-  override def second: Expression = lon
-  override def third: Expression = lat
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "locate_along"
-  protected override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    GeoFn.locateAlong(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[Double], c.asInstanceOf[Double])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c) => s"graft.functions.GeoFn.locateAlong($a, $b, $c)")
-  protected override def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): LocateAlong =
-    copy(a, b, c)
-}
-
-/** Returns array(lon, lat, distAlongKm, distToKm). */
-case class NearestPointOnLine(line: Expression, lon: Expression, lat: Expression)
-    extends TernaryExpression {
-  override def first: Expression = line
-  override def second: Expression = lon
-  override def third: Expression = lat
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "nearest_point_on_line"
-  protected override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    GeoFn.nearestPoint(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[Double], c.asInstanceOf[Double])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c) => s"graft.functions.GeoFn.nearestPoint($a, $b, $c)")
-  protected override def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): NearestPointOnLine =
-    copy(a, b, c)
-}
-
-case class PointAlong(line: Expression, dist: Expression)
-    extends BinaryExpression {
-  override def left: Expression = line
-  override def right: Expression = dist
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "point_along"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    GeoFn.pointAlong(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[Double])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.GeoFn.pointAlong($a, $b)")
-  protected override def withNewChildrenInternal(l: Expression, r: Expression): PointAlong =
-    copy(l, r)
-}
-
-case class LineSliceAlong(line: Expression, start: Expression, stop: Expression)
-    extends TernaryExpression {
-  override def first: Expression = line
-  override def second: Expression = start
-  override def third: Expression = stop
-  override def dataType: DataType = ExprHelp.lineType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "line_slice_along"
-  protected override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    GeoFn.lineSliceAlong(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[Double], c.asInstanceOf[Double])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c) => s"graft.functions.GeoFn.lineSliceAlong($a, $b, $c)")
-  protected override def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): LineSliceAlong =
-    copy(a, b, c)
-}
-
-case class Densify(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = ExprHelp.lineType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "densify"
-  protected override def nullSafeEval(v: Any): Any =
-    GeoFn.densify(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.GeoFn.densify($c)")
-  protected override def withNewChildInternal(c: Expression): Densify = copy(c)
-}
-
-case class CellEncode(lon: Expression, lat: Expression, level: Expression)
-    extends TernaryExpression {
-  override def first: Expression = lon
-  override def second: Expression = lat
-  override def third: Expression = level
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "cell_encode"
-  protected override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    GeoFn.cellEncode(a.asInstanceOf[Double], b.asInstanceOf[Double], c.asInstanceOf[Int])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c) => s"graft.functions.GeoFn.cellEncode($a, $b, $c)")
-  protected override def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): CellEncode =
-    copy(a, b, c)
-}
-
-case class CellRing(cell: Expression, k: Expression)
-    extends BinaryExpression {
-  override def left: Expression = cell
-  override def right: Expression = k
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "cell_ring"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    GeoFn.cellRing(a.asInstanceOf[Long], b.asInstanceOf[Int])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.GeoFn.cellRing($a, $b)")
-  protected override def withNewChildrenInternal(l: Expression, r: Expression): CellRing =
-    copy(l, r)
-}
-
-case class CellDisk(cell: Expression, k: Expression)
-    extends BinaryExpression {
-  override def left: Expression = cell
-  override def right: Expression = k
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "cell_disk"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    GeoFn.cellDisk(a.asInstanceOf[Long], b.asInstanceOf[Int])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.GeoFn.cellDisk($a, $b)")
-  protected override def withNewChildrenInternal(l: Expression, r: Expression): CellDisk =
-    copy(l, r)
-}
-
-case class CellCoverLine(line: Expression, level: Expression)
-    extends BinaryExpression {
-  override def left: Expression = line
-  override def right: Expression = level
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "cell_cover_line"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    GeoFn.cellCoverLine(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[Int])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.GeoFn.cellCoverLine($a, $b)")
-  protected override def withNewChildrenInternal(l: Expression, r: Expression): CellCoverLine =
-    copy(l, r)
-}
-
-case class GeoProxKey(lon: Expression, lat: Expression)
-    extends BinaryExpression {
-  override def left: Expression = lon
-  override def right: Expression = lat
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "geoprox_key"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    GeoFn.geoProxKey(a.asInstanceOf[Double], b.asInstanceOf[Double])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.GeoFn.geoProxKey($a, $b)")
-  protected override def withNewChildrenInternal(l: Expression, r: Expression): GeoProxKey =
-    copy(l, r)
-}
-
-/** True iff every vertex of `line` lies inside polygon `ring`. */
-case class WithinRing(line: Expression, ring: Expression)
-    extends BinaryExpression {
-  override def left: Expression = line
-  override def right: Expression = ring
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "within_ring"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    GeoFn.withinRing(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.GeoFn.withinRing($a, $b)")
-  protected override def withNewChildrenInternal(l: Expression, r: Expression): WithinRing =
-    copy(l, r)
-}
-
-case class PointInRing(ring: Expression, lon: Expression, lat: Expression)
-    extends TernaryExpression {
-  override def first: Expression = ring
-  override def second: Expression = lon
-  override def third: Expression = lat
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "point_in_ring"
-  protected override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    GeoFn.pointInRing(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[Double], c.asInstanceOf[Double])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c) => s"graft.functions.GeoFn.pointInRing($a, $b, $c)")
-  protected override def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): PointInRing =
-    copy(a, b, c)
-}
-
-case class FrechetDistance(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "frechet_km"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    GeoFn.frechetKm(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.GeoFn.frechetKm($a, $b)")
-  protected override def withNewChildrenInternal(l: Expression, r: Expression): FrechetDistance =
-    copy(l, r)
-}
-
-case class HausdorffDistance(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "hausdorff_km"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    GeoFn.hausdorffKm(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.GeoFn.hausdorffKm($a, $b)")
-  protected override def withNewChildrenInternal(l: Expression, r: Expression): HausdorffDistance =
-    copy(l, r)
-}
-
-/** Max distance (km) from any vertex of `left` to polyline `right` —
-  * small iff `left` lies along `right` (one-sided containment score). */
-case class DirectedHausdorff(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "directed_hausdorff_km"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    GeoFn.directedHausdorffKm(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.GeoFn.directedHausdorffKm($a, $b)")
-  protected override def withNewChildrenInternal(l: Expression, r: Expression): DirectedHausdorff =
-    copy(l, r)
-}
-
-case class TileX(lon: Expression, zoom: Expression)
-    extends BinaryExpression {
-  override def left: Expression = lon
-  override def right: Expression = zoom
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "tile_x"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    GeoFn.tileX(a.asInstanceOf[Double], b.asInstanceOf[Int])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.GeoFn.tileX($a, $b)")
-  protected override def withNewChildrenInternal(l: Expression, r: Expression): TileX =
-    copy(l, r)
-}
-
-case class TileY(lat: Expression, zoom: Expression)
-    extends BinaryExpression {
-  override def left: Expression = lat
-  override def right: Expression = zoom
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "tile_y"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    GeoFn.tileY(a.asInstanceOf[Double], b.asInstanceOf[Int])
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.GeoFn.tileY($a, $b)")
-  protected override def withNewChildrenInternal(l: Expression, r: Expression): TileY =
-    copy(l, r)
+  /** The row named `name` (its SQL function name). */
+  def kernel(name: String): GeoKernel = byName(name)
 }
 
 /**
@@ -390,7 +187,7 @@ object MatchScore {
   /** struct<score: double, geometry: array<array<double>>> */
   val schema: DataType = StructType(Seq(
     StructField("score", DoubleType, nullable = false),
-    StructField("geometry", ExprHelp.lineType, nullable = false)))
+    StructField("geometry", GeoCall.lineType, nullable = false)))
 }
 
 /**

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftshim.Shim.{col => toCol, expr => toExpr}
 
 /**
@@ -12,54 +13,54 @@ import org.apache.spark.sql.graftshim.Shim.{col => toCol, expr => toExpr}
  */
 object geo {
 
-  def geodesic_length_km(line: Column): Column = toCol(GeodesicLength(toExpr(line)))
+  private def call(name: String, args: Column*): Column =
+    toCol(GeoCall(GeoCall.kernel(name), args.map(toExpr)))
+
+  def geodesic_length_km(line: Column): Column = call("geodesic_length_km", line)
 
   def haversine_km(lon1: Column, lat1: Column, lon2: Column, lat2: Column): Column =
-    toCol(Haversine(toExpr(lon1), toExpr(lat1), toExpr(lon2), toExpr(lat2)))
+    call("haversine_km", lon1, lat1, lon2, lat2)
 
-  def final_bearing(line: Column): Column = toCol(FinalBearing(toExpr(line)))
+  def final_bearing(line: Column): Column = call("final_bearing", line)
 
-  def bearing_delta(b1: Column, b2: Column): Column = toCol(BearingDelta(toExpr(b1), toExpr(b2)))
+  def bearing_delta(b1: Column, b2: Column): Column = call("bearing_delta", b1, b2)
 
   def locate_along(line: Column, lon: Column, lat: Column): Column =
-    toCol(LocateAlong(toExpr(line), toExpr(lon), toExpr(lat)))
+    call("locate_along", line, lon, lat)
 
   def nearest_point_on_line(line: Column, lon: Column, lat: Column): Column =
-    toCol(NearestPointOnLine(toExpr(line), toExpr(lon), toExpr(lat)))
+    call("nearest_point_on_line", line, lon, lat)
 
-  def point_along(line: Column, dist: Column): Column =
-    toCol(PointAlong(toExpr(line), toExpr(dist)))
+  def point_along(line: Column, dist: Column): Column = call("point_along", line, dist)
 
   def line_slice_along(line: Column, start: Column, stop: Column): Column =
-    toCol(LineSliceAlong(toExpr(line), toExpr(start), toExpr(stop)))
+    call("line_slice_along", line, start, stop)
 
-  def densify(line: Column): Column = toCol(Densify(toExpr(line)))
+  def densify(line: Column): Column = call("densify", line)
 
   def cell_encode(lon: Column, lat: Column, level: Column): Column =
-    toCol(CellEncode(toExpr(lon), toExpr(lat), toExpr(level)))
+    call("cell_encode", lon, lat, level)
 
-  def cell_ring(cell: Column, k: Column): Column = toCol(CellRing(toExpr(cell), toExpr(k)))
+  def cell_ring(cell: Column, k: Column): Column = call("cell_ring", cell, k)
 
-  def cell_disk(cell: Column, k: Column): Column = toCol(CellDisk(toExpr(cell), toExpr(k)))
+  def cell_disk(cell: Column, k: Column): Column = call("cell_disk", cell, k)
 
   def cell_cover_line(line: Column, level: Column): Column =
-    toCol(CellCoverLine(toExpr(line), toExpr(level)))
+    call("cell_cover_line", line, level)
 
-  def geoprox_key(lon: Column, lat: Column): Column =
-    toCol(GeoProxKey(toExpr(lon), toExpr(lat)))
+  def geoprox_key(lon: Column, lat: Column): Column = call("geoprox_key", lon, lat)
 
-  def within_ring(line: Column, ring: Column): Column =
-    toCol(WithinRing(toExpr(line), toExpr(ring)))
+  def within_ring(line: Column, ring: Column): Column = call("within_ring", line, ring)
 
   def point_in_ring(ring: Column, lon: Column, lat: Column): Column =
-    toCol(PointInRing(toExpr(ring), toExpr(lon), toExpr(lat)))
+    call("point_in_ring", ring, lon, lat)
 
-  def frechet_km(a: Column, b: Column): Column = toCol(FrechetDistance(toExpr(a), toExpr(b)))
+  def frechet_km(a: Column, b: Column): Column = call("frechet_km", a, b)
 
-  def hausdorff_km(a: Column, b: Column): Column = toCol(HausdorffDistance(toExpr(a), toExpr(b)))
+  def hausdorff_km(a: Column, b: Column): Column = call("hausdorff_km", a, b)
 
   def directed_hausdorff_km(a: Column, b: Column): Column =
-    toCol(DirectedHausdorff(toExpr(a), toExpr(b)))
+    call("directed_hausdorff_km", a, b)
 
   /** Fused matcher scoring: struct(score, geometry) or NULL when gated out.
     * See [[MatchScore]]; bit-identical to the composed locate/slice/
@@ -78,9 +79,9 @@ object geo {
     toCol(MatchSummary(toExpr(rGeom), toExpr(fGeom), toExpr(revOk),
       minOverlapKm, maxHausdorffKm))
 
-  def tile_x(lon: Column, zoom: Column): Column = toCol(TileX(toExpr(lon), toExpr(zoom)))
+  def tile_x(lon: Column, zoom: Column): Column = call("tile_x", lon, zoom)
 
-  def tile_y(lat: Column, zoom: Column): Column = toCol(TileY(toExpr(lat), toExpr(zoom)))
+  def tile_y(lat: Column, zoom: Column): Column = call("tile_y", lat, zoom)
 
   /** Z-order (Morton) key: interleave the low `bits` bits of two cell
     * coordinates — x in the even positions, y in the odd — so that keys
@@ -95,10 +96,7 @@ object geo {
   def morton_key(x: Column, y: Column, bits: Int): Column =
     toCol(mortonExpr(toExpr(x), toExpr(y), bits))
 
-  private[graft] def mortonExpr(
-      x: org.apache.spark.sql.catalyst.expressions.Expression,
-      y: org.apache.spark.sql.catalyst.expressions.Expression,
-      bits: Int): org.apache.spark.sql.catalyst.expressions.Expression = {
+  private[graft] def mortonExpr(x: Expression, y: Expression, bits: Int): Expression = {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.types.{IntegerType, LongType}
     require(bits >= 1 && bits <= 31, s"morton bits must be in [1,31], got $bits")
@@ -112,36 +110,15 @@ object geo {
       .reduce[Expression]((a, b) => Add(a, b))
   }
 
-  /** (name, arity, builder) for every SQL-exposed function — the single
+  /** (name, arity, builder) for every SQL-exposed function — the
+    * [[GeoCall.table]] rows, then the functions built by hand — the single
     * table behind both [[register]] (temp functions on a live session) and
     * `GraftExtensions.injectFunction` (session-build-time registration via
     * `spark.sql.extensions=graft.plans.GraftExtensions`, no code call
     * needed). Arity is carried so both paths reject wrong argument counts
     * with a clear message instead of a MatchError. */
-  private[graft] val sqlFunctions: Seq[(String, Int,
-      Seq[org.apache.spark.sql.catalyst.expressions.Expression]
-        => org.apache.spark.sql.catalyst.expressions.Expression)] = Seq(
-    ("geodesic_length_km", 1, { case Seq(a) => GeodesicLength(a) }),
-    ("haversine_km", 4, { case Seq(a, b, c, d) => Haversine(a, b, c, d) }),
-    ("final_bearing", 1, { case Seq(a) => FinalBearing(a) }),
-    ("bearing_delta", 2, { case Seq(a, b) => BearingDelta(a, b) }),
-    ("locate_along", 3, { case Seq(a, b, c) => LocateAlong(a, b, c) }),
-    ("nearest_point_on_line", 3, { case Seq(a, b, c) => NearestPointOnLine(a, b, c) }),
-    ("point_along", 2, { case Seq(a, b) => PointAlong(a, b) }),
-    ("line_slice_along", 3, { case Seq(a, b, c) => LineSliceAlong(a, b, c) }),
-    ("densify", 1, { case Seq(a) => Densify(a) }),
-    ("cell_encode", 3, { case Seq(a, b, c) => CellEncode(a, b, c) }),
-    ("cell_ring", 2, { case Seq(a, b) => CellRing(a, b) }),
-    ("cell_disk", 2, { case Seq(a, b) => CellDisk(a, b) }),
-    ("cell_cover_line", 2, { case Seq(a, b) => CellCoverLine(a, b) }),
-    ("geoprox_key", 2, { case Seq(a, b) => GeoProxKey(a, b) }),
-    ("within_ring", 2, { case Seq(a, b) => WithinRing(a, b) }),
-    ("point_in_ring", 3, { case Seq(a, b, c) => PointInRing(a, b, c) }),
-    ("frechet_km", 2, { case Seq(a, b) => FrechetDistance(a, b) }),
-    ("hausdorff_km", 2, { case Seq(a, b) => HausdorffDistance(a, b) }),
-    ("directed_hausdorff_km", 2, { case Seq(a, b) => DirectedHausdorff(a, b) }),
-    ("tile_x", 2, { case Seq(a, b) => TileX(a, b) }),
-    ("tile_y", 2, { case Seq(a, b) => TileY(a, b) }),
+  private[graft] val sqlFunctions: Seq[(String, Int, Seq[Expression] => Expression)] =
+    GeoCall.table.map(k => (k.name, k.arity, GeoCall(k, _: Seq[Expression]))) ++ Seq(
     ("html_text", 1, { case Seq(a) => HtmlText(a) }),
     ("cosine_sim", 2, { case Seq(a, b) => CosineSim(a, b) }),
     ("sig_eq_count", 2, { case Seq(a, b) => SigEqCount(a, b) }),
@@ -197,10 +174,7 @@ object geo {
 
   /** Wrap a builder with an arity check (MatchError → readable error). */
   private[graft] def checkedBuilder(name: String, arity: Int,
-      builder: Seq[org.apache.spark.sql.catalyst.expressions.Expression]
-        => org.apache.spark.sql.catalyst.expressions.Expression)
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression]
-        => org.apache.spark.sql.catalyst.expressions.Expression =
+      builder: Seq[Expression] => Expression): Seq[Expression] => Expression =
     args => {
       require(args.length == arity,
         s"$name expects $arity argument(s), got ${args.length}")

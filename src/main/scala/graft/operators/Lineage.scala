@@ -58,9 +58,12 @@ object Lineage {
    * Commit processed units: per-unit dynamic-partition overwrite of results
    * (re-processing a crashed unit replaces, never duplicates), then the
    * ledger rows (row counts + checksums as the per-partition metrics
-   * channel) as one snapshot. Returns the ledger increment for inspection.
+   * channel) as one snapshot. The ledger rows are computed from the result
+   * partitions of `units` as written, so `results` is evaluated once and the
+   * checksums describe exactly the rows on disk. Returns the ledger increment
+   * as written.
    */
-  def commit(results: DataFrame, keyCol: String, resultPath: String,
+  def commit(results: DataFrame, keyCol: String, units: Seq[Any], resultPath: String,
       ledgerRoot: String, runId: String): DataFrame = {
     val spark = results.sparkSession
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
@@ -70,9 +73,14 @@ object Lineage {
     } finally {
       prev.foreach(spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
     }
-    val ledger = unitMetrics(results, keyCol).withColumn("run_id", lit(runId))
-    SnapTable.append(ledger, ledgerRoot)
-    ledger
+    // the partition values parse back as the key's own type (not inferred)
+    val written = spark.read.schema(results.schema).parquet(resultPath)
+      .where(col(keyCol).isin(units: _*))
+    val ledger = unitMetrics(written, keyCol).withColumn("run_id", lit(runId))
+    val files = SnapTable.stage(ledger, ledgerRoot)
+    SnapTable.publish(spark, ledgerRoot, "append", ledger.schema.toDDL, files)
+    if (files.isEmpty) ledger.limit(0)
+    else spark.read.schema(ledger.schema).parquet(files.map(_.path): _*)
   }
 
   /**
@@ -80,17 +88,19 @@ object Lineage {
    * output. Calling this repeatedly after partial failures converges to the
    * complete result with no recomputation of finished units and no
    * duplicates (exact resume); a call with nothing left commits no snapshot.
+   * `process` runs once per call.
    */
   def runIncremental(work: DataFrame, keyCol: String, resultPath: String,
       ledgerRoot: String, runId: String)(process: DataFrame => DataFrame): Long = {
     val todo = remaining(work, keyCol, ledgerRoot)
-    if (todo.isEmpty) 0L
+    val units = todo.select(keyCol).distinct().collect().map(_.get(0)).toSeq
+    if (units.isEmpty) 0L
     else {
       val out = process(todo)
       require(out.columns.contains(keyCol),
         s"process() must preserve the unit key column '$keyCol'")
-      commit(out, keyCol, resultPath, ledgerRoot, runId)
-        .agg(sum("n_rows")).collect()(0).getLong(0)
+      commit(out, keyCol, units, resultPath, ledgerRoot, runId)
+        .agg(coalesce(sum("n_rows"), lit(0L))).collect()(0).getLong(0)
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.{CellEncode, GeoFn, WithinRing}
+import graft.functions.{GeoCall, GeoFn}
 import graft.geo.Cell
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
@@ -27,11 +27,14 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
  */
 object SpatialFilterRewrite extends Rule[LogicalPlan] {
 
-  /** Marks a WithinRing that already has its InSet prefilter, so the rule is
-    * IDEMPOTENT under the optimizer's fixed-point batches — without it the
-    * rewritten `And(InSet, WithinRing)` matches again every iteration and
-    * grows a duplicate InSet until the max-iteration cap (VERDICT r1 /
-    * ADVICE: 100 duplicate conjuncts evaluated per row under
+  private val withinRing = GeoCall.kernel("within_ring")
+  private val cellEncode = GeoCall.kernel("cell_encode")
+
+  /** Marks a within_ring call that already has its InSet prefilter, so the
+    * rule is IDEMPOTENT under the optimizer's fixed-point batches — without
+    * it the rewritten `And(InSet, within_ring)` matches again every
+    * iteration and grows a duplicate InSet until the max-iteration cap
+    * (VERDICT r1 / ADVICE: 100 duplicate conjuncts evaluated per row under
     * experimental.extraOptimizations). Tags ride along through transform
     * copies, so the marker survives surrounding rewrites. */
   private val Prefiltered =
@@ -51,13 +54,13 @@ object SpatialFilterRewrite extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond, _) =>
       val rewritten = cond.transformUp {
-        case w @ WithinRing(line, ring: Literal)
+        case w @ GeoCall(`withinRing`, Seq(line, ring: Literal))
             if ring.value != null && w.getTagValue(Prefiltered).isEmpty =>
           val ringArr = GeoFn.toLine(
             ring.value.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
           val (lvl, cover) = coverFor(ringArr)
           val firstPt = ElementAt(line, Literal(1))
-          val cellId = CellEncode(
+          val cellId = cellEncode(
             ElementAt(firstPt, Literal(1)),
             ElementAt(firstPt, Literal(2)),
             Literal(lvl, IntegerType))

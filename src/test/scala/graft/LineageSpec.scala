@@ -105,4 +105,22 @@ class LineageSpec extends AnyFunSuite {
     assert(SnapTable.scan(spark, led2, asOf = Some(1))
       .select("unit_key").distinct().count() == 2)
   }
+
+  test("runIncremental evaluates process once: the ledger comes from the rows written") {
+    val (res, led) = freshDirs()
+    val seen = spark.sparkContext.longAccumulator("process input rows")
+    // nondeterministic, so the filter stays above the anti-join and counts
+    // exactly the rows each evaluation of process feeds through
+    val counted = udf { (_: String) => seen.add(1); true }.asNondeterministic()
+    val n = Lineage.runIncremental(workUnits, "unit", res, led, "once") { df =>
+      process(df.filter(counted(col("unit"))))
+    }
+    val total = workUnits.count()
+    assert(n == total)
+    assert(seen.value == total, s"process evaluated ${seen.value.toDouble / total}x")
+    // the committed ledger describes the rows on disk
+    val disk = spark.read.parquet(res).groupBy(col("unit").as("unit_key")).count()
+    val ledger = SnapTable.scan(spark, led).select(col("unit_key"), col("n_rows").as("count"))
+    assert(disk.exceptAll(ledger).count() == 0 && ledger.exceptAll(disk).count() == 0)
+  }
 }

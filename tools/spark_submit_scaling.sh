@@ -18,7 +18,9 @@
 #
 # and ScalingBench then runs its warm-up inside the measured session. The
 # driver heap is SPARK_DRIVER_MEM, by default half the host's memory clamped
-# to 2-8g. Prints the level's JSON line on stdout.
+# to 2-8g. Prints the level's JSON line on stdout. spark-submit comes from
+# $SPARK_HOME. A local-cluster level's executors leave app-* dirs under
+# $SPARK_HOME/work; the ones this run created are removed when it ends.
 set -eu
 cd "$(dirname "$0")/.."
 CPUS=${1:?usage: tools/spark_submit_scaling.sh <cpus> [pages] [roads] [spark-submit options...]}
@@ -30,6 +32,18 @@ if [ ! -f "$JAR" ]; then
   exit 1
 fi
 MEM=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)}
-exec /opt/spark/bin/spark-submit --master "local[$CPUS]" --driver-memory "$MEM" \
+SPARK=${SPARK_HOME:?set SPARK_HOME to the Spark install}
+WORK=$SPARK/work
+HAD_WORK=$([ -d "$WORK" ] && echo 1 || true)
+BEFORE=$(ls -d "$WORK"/app-* 2>/dev/null || true)
+cleanup() {
+  for d in "$WORK"/app-*; do
+    if [ -d "$d" ] && ! grep -qxF "$d" <<< "$BEFORE"; then rm -rf "$d"; fi
+  done
+  # a work dir this run created goes too, but only while it is empty
+  if [ -z "$HAD_WORK" ]; then rmdir "$WORK" 2>/dev/null || true; fi
+}
+trap cleanup EXIT
+"$SPARK"/bin/spark-submit --master "local[$CPUS]" --driver-memory "$MEM" \
   --conf spark.driver.extraJavaOptions=-XX:+AlwaysPreTouch \
   "$@" --class graft.ScalingBench "$JAR" "$CPUS" "$PAGES" "$ROADS"
